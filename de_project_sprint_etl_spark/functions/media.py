@@ -120,27 +120,16 @@ def write_media_fixture(
     files to read. Fixture scaffolding ONLY — a production corpus
     already exists as files; hence the driver-side iterator is fine
     here and deliberately not a data-plane pattern. Idempotent per
-    ``out_dir`` (marker file + atomic rename)."""
-    import os
-    import shutil
-    from pathlib import Path
+    ``out_dir``, published atomically (``artifacts.publish``)."""
+    from de_project_sprint_etl_spark.artifacts import publish
 
-    p = Path(out_dir)
-    if (p / "_SUCCESS").exists():
-        return str(p)
-    shutil.rmtree(p, ignore_errors=True)
-    tmp = Path(f"{out_dir}.tmp{os.getpid()}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    tmp.mkdir(parents=True)
-    for row in docs.select(id_col, text_col).toLocalIterator():
-        kind = MEDIA_KINDS[row[0] % len(MEDIA_KINDS)]
-        (tmp / f"{row[0]:08d}.{kind}").write_bytes(row[1].encode("utf-8"))
-    (tmp / "_SUCCESS").touch()
-    try:
-        os.replace(tmp, p)
-    except OSError:  # concurrent writer won the rename
-        shutil.rmtree(tmp, ignore_errors=True)
-    return str(p)
+    def write(tmp) -> None:
+        tmp.mkdir()
+        for row in docs.select(id_col, text_col).toLocalIterator():
+            kind = MEDIA_KINDS[row[0] % len(MEDIA_KINDS)]
+            (tmp / f"{row[0]:08d}.{kind}").write_bytes(row[1].encode("utf-8"))
+
+    return str(publish(out_dir, write))
 
 
 def _fake_decode(kind: str, payload: bytes) -> tuple[str, int, int, int, int]:

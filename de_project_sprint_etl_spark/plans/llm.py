@@ -23,6 +23,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from de_project_sprint_etl_spark import artifacts
 from de_project_sprint_etl_spark.functions import dedup, embeddings, media, similarity, text
 from de_project_sprint_etl_spark.functions.caching import cached_generation
 from de_project_sprint_etl_spark.functions.text import SQL_NORM, sql_h64
@@ -84,42 +85,33 @@ def docs_fanned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # keeps each query self-contained but pays the regex/shingle/explode
 # subtree N times per session. At 100 TB these streams are pipeline
 # *stages* — shingle once, materialize, reuse — so the engine does the
-# same here: each stream is written to parquet once per (sf_dir, source
-# fingerprint) and later queries scan it. Results are bit-identical to
-# the inline derivation (a deterministic projection round-tripped
-# through parquet); the DuckDB oracles still derive everything from the
-# raw `documents` table, so the correctness gate also checks the cache.
+# same here: each stream is written once per corpus generation into the
+# artifact store (de_project_sprint_etl_spark/artifacts.py) and later
+# queries scan it. Results are bit-identical to the inline derivation (a
+# deterministic projection round-tripped through parquet); the DuckDB
+# oracles still derive everything from the raw `documents` table, so the
+# correctness gate also checks the cache.
 
-_CACHE_ROOT = str(Path(__file__).resolve().parents[2] / ".cache" / "derived")
-
-
-_READ_CACHE: dict[tuple[int, str], DataFrame] = {}
+#: the one fixture table every artifact of this module is built from
+DOCS = ("documents",)
 
 
 def _artifact_path(sf_dir: str, name: str) -> Path:
-    """Stage-artifact directory for ``name``, keyed by the corpus
-    fingerprint (documents.parquet mtime+size) — a regenerated fixture
-    can never serve a stale artifact."""
-    src = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = sf_dir.strip("/").replace("/", "_")
-    return Path(_CACHE_ROOT) / f"{key}-{src.st_mtime_ns}-{src.st_size}" / name
-
-
-def _read_artifact(spark: SparkSession, path: Path) -> DataFrame:
-    rkey = (id(spark), str(path))
-    if rkey not in _READ_CACHE:
-        _READ_CACHE[rkey] = fan_out(spark, spark.read.parquet(str(path)))
-    return _READ_CACHE[rkey]
+    """Directory of the documents-derived artifact (or view) ``name``."""
+    return artifacts.location(sf_dir, name, DOCS)
 
 
 def _materialized(
     spark: SparkSession, sf_dir: str, name: str, build
 ) -> DataFrame:
-    path = _artifact_path(sf_dir, name)
-    if not (path / "_SUCCESS").exists():
-        build().write.mode("overwrite").parquet(str(path))
-        _READ_CACHE.pop((id(spark), str(path)), None)
-    return _read_artifact(spark, path)
+    return artifacts.read(
+        spark,
+        sf_dir,
+        name,
+        DOCS,
+        lambda p: build().write.parquet(str(p)),
+        lambda p: fan_out(spark, spark.read.parquet(str(p))),
+    )
 
 
 def _docs_with_mutants_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -356,25 +348,6 @@ def minhash_pairs_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _refreshed_artifact(spark: SparkSession, sf_dir: str, name: str,
-                        build_writes) -> DataFrame:
-    """Run ``build_writes(path)`` (a multi-step overwrite+append write
-    sequence) once per corpus, gated on a marker touched only AFTER the
-    last write — parquet's own _SUCCESS lands after the FIRST write, so
-    gating on it could serve a half-refreshed table after a crash
-    between the two steps. Still used where the refreshed table is a
-    REWRITE by nature (dup groups: membership of old rows changes);
-    append-shaped refreshes use the manifest-gated in-place views
-    below."""
-    path = _artifact_path(sf_dir, name)
-    done = path / "_REFRESH_COMPLETE"
-    if not done.exists():
-        build_writes(path)
-        done.touch()
-        _READ_CACHE.pop((id(spark), str(path)), None)
-    return _read_artifact(spark, path)
-
-
 def _view_artifact(
     spark: SparkSession,
     sf_dir: str,
@@ -405,24 +378,16 @@ def _view_artifact(
         incremental.append_delta(data, root, tag=tag, deletes=deletes)
     # keyed by the manifest's unique commit id, not the generation
     # number: a lost-manifest recovery re-commits at the SAME gen with
-    # fresh part files, and a gen-keyed cache would serve the dead plan
+    # fresh part files, and a gen-keyed cache would serve the dead plan;
+    # a new cid evicts the old one's scan
     man = incremental.read_manifest(root)
-    rkey = (id(spark), f"{root}::{man.get('cid', man['gen'])}")
-    if rkey not in _READ_CACHE:
-        # evict superseded generations of THIS view (a long-lived
-        # session committing daily refreshes would otherwise retain one
-        # dead plan per old cid — the bare-persist leak shape
-        # functions/caching.py exists to bound)
-        prefix = f"{root}::"
-        for k in [
-            k for k in _READ_CACHE
-            if isinstance(k[1], str) and k[1].startswith(prefix)
-        ]:
-            _READ_CACHE.pop(k, None)
-        _READ_CACHE[rkey] = fan_out(
-            spark, incremental.read_view(spark, root, columns=columns)
-        )
-    return _READ_CACHE[rkey]
+    return artifacts.memo(
+        spark,
+        sf_dir,
+        name,
+        (root.parent.name, man.get("cid", man["gen"])),
+        lambda: fan_out(spark, incremental.read_view(spark, root, columns=columns)),
+    )
 
 
 def minhash_refresh_delta(
@@ -804,7 +769,7 @@ def refresh_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     full pair graph; the full-rebuild CC never touches the snapshot
     pairs again."""
 
-    def build(path):
+    def build() -> DataFrame:
         snap = dup_groups_snapshot(spark, sf_dir)
         star = snap.filter(F.col("id") != F.col("group_id")).select(
             F.col("group_id").alias("id_a"), F.col("id").alias("id_b")
@@ -817,13 +782,9 @@ def refresh_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         # star edges are (group_id < id, one row per member); new pairs
         # are distinct with id_b >= MUT_OFFSET > every snapshot id, so the
         # union stays one distinct row per unordered pair with id_a < id_b
-        dedup.dup_groups(
-            star.unionByName(new_pairs), simple_pairs=True
-        ).write.mode(
-            "overwrite"
-        ).parquet(str(path))
+        return dedup.dup_groups(star.unionByName(new_pairs), simple_pairs=True)
 
-    return _refreshed_artifact(spark, sf_dir, "mh_groups_refreshed", build)
+    return _materialized(spark, sf_dir, "mh_groups_refreshed", build)
 
 
 SQL_DOCS_MUT = f"""
@@ -1817,16 +1778,15 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per corpus) the partitionBy(cell) IVF index under the
-    derived-stream cache; keyed like _materialized."""
-    src = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = sf_dir.strip("/").replace("/", "_")
-    path = Path(_CACHE_ROOT) / f"{key}-emb-{src.st_mtime_ns}-{src.st_size}" / "ivf_index"
-    if not (path / "_SUCCESS").exists():
+    artifact store, keyed on the embeddings table."""
+
+    def write(path: Path) -> None:
         emb = fan_out(spark, t(spark, sf_dir, "embeddings"))
         similarity.build_ivf_index(
             emb, emb.filter(F.col("vec_id") % IVF_STRIDE == 0), str(path)
         )
-    return str(path)
+
+    return str(artifacts.build(sf_dir, "ivf_index", ("embeddings",), write))
 
 
 _SQL_ANN_IVF_ADAPTIVE = _SQL_ANN_IVF.replace(
@@ -2381,15 +2341,11 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.extract_features(media.synth_media(docs))
 
 
-MEDIA_FIXTURE_ROOT = str(
-    Path(__file__).resolve().parents[2] / ".cache" / "media_fixture"
-)
-
-
 @register("media_from_files", _SQL_MEDIA_FEATURES)
 def q_media_from_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real-file multimodal ingest: the documents table is materialized
-    once per sf_dir as one binary file per row (fixture scaffolding —
+    once per documents generation as one binary file per row, in the
+    artifact store (fixture scaffolding —
     a real corpus already exists as files), then ingested with
     ``spark.read.format('binaryFile')`` into MEDIA_SCHEMA and decoded
     through the same Arrow-batched ``extract_features`` path. Shares
@@ -2397,7 +2353,7 @@ def q_media_from_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature is too."""
     fixture = media.write_media_fixture(
         t(spark, sf_dir, "documents").select("doc_id", "text"),
-        f"{MEDIA_FIXTURE_ROOT}/{sf_dir.strip('/').replace('/', '_')}",
+        str(_artifact_path(sf_dir, "media_fixture")),
     )
     return media.extract_features(media.read_media_files(spark, fixture))
 

@@ -42,6 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from de_project_sprint_etl_spark import artifacts
 from de_project_sprint_etl_spark.plans.registry import register
 from de_project_sprint_etl_spark.plans.testdata import events_df, t
 
@@ -830,39 +831,23 @@ def q_orders_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def copurchase_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The part co-purchase edge set, materialized once per corpus
-    generation (same keying discipline as plans/llm._materialized): a
+    generation in the artifact store, keyed on ``lineitem``: a
     graph at scale is a pipeline ARTIFACT — built by one job, queried by
     many — so pagerank/triangles scanning the edge parquet is the
     production shape, not a shortcut. The DuckDB oracles still derive
     the edges from raw ``lineitem``, so the cache sits inside the
     correctness gate. Bit-identical to the inline derivation (a
     deterministic projection round-tripped through parquet)."""
-    from pathlib import Path
+    from de_project_sprint_etl_spark.plans.llm import fan_out
 
-    from de_project_sprint_etl_spark.plans.llm import _CACHE_ROOT, fan_out
-
-    src = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    key = sf_dir.strip("/").replace("/", "_")
-    path = (
-        Path(_CACHE_ROOT)
-        / f"{key}-li-{src.st_mtime_ns}-{src.st_size}"
-        / "copurchase_edges"
+    return artifacts.read(
+        spark,
+        sf_dir,
+        "copurchase_edges",
+        ("lineitem",),
+        lambda p: graph.copurchase_edges(t(spark, sf_dir, "lineitem")).write.parquet(str(p)),
+        lambda p: fan_out(spark, spark.read.parquet(str(p))),
     )
-    if not (path / "_SUCCESS").exists():
-        graph.copurchase_edges(t(spark, sf_dir, "lineitem")).write.mode(
-            "overwrite"
-        ).parquet(str(path))
-        _EDGE_READ_CACHE.pop((id(spark), str(path)), None)
-    # memoize the scan DataFrame per (session, path): a fresh
-    # spark.read.parquet per call would defeat fan_out's id(df)-keyed
-    # decision cache and re-pay its planning probe on every invocation
-    rkey = (id(spark), str(path))
-    if rkey not in _EDGE_READ_CACHE:
-        _EDGE_READ_CACHE[rkey] = fan_out(spark, spark.read.parquet(str(path)))
-    return _EDGE_READ_CACHE[rkey]
-
-
-_EDGE_READ_CACHE: dict[tuple[int, str], DataFrame] = {}
 
 
 # --- bucketed co-located join (write-time shuffle, amortized) ---------------
@@ -1450,6 +1435,35 @@ def q_rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scoping, auto-compact rewrite — preserves values exactly.
 
 _UPSERT_COLS = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+_ORDERS = ("orders",)
+
+
+def _orders_upsert_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The views' shared base: the orders projection, written once per
+    orders generation."""
+    from de_project_sprint_etl_spark.plans.llm import fan_out
+
+    return artifacts.read(
+        spark,
+        sf_dir,
+        "orders_upsert_base",
+        _ORDERS,
+        lambda p: t(spark, sf_dir, "orders").select(*_UPSERT_COLS).write.parquet(str(p)),
+        lambda p: fan_out(spark, spark.read.parquet(str(p))),
+    )
+
+
+def _orders_view(spark: SparkSession, sf_dir: str, name: str):
+    """The upsert base and the root of view ``name`` initialized over
+    it; returns (base, root)."""
+    from de_project_sprint_etl_spark.sources import incremental
+
+    base = _orders_upsert_base(spark, sf_dir)
+    root = artifacts.location(sf_dir, name, _ORDERS)
+    incremental.init_view(
+        root, [str(artifacts.location(sf_dir, "orders_upsert_base", _ORDERS))]
+    )
+    return base, root
 
 
 def _orders_upsert_view(spark: SparkSession, sf_dir: str):
@@ -1462,19 +1476,9 @@ def _orders_upsert_view(spark: SparkSession, sf_dir: str):
     touches). ``auto_compact_after=2`` makes compaction fire after day
     2's commit, so the read below spans a compacted member plus a live
     delta — both protocol halves in one registered plan."""
-    from de_project_sprint_etl_spark.plans import llm as _llm
     from de_project_sprint_etl_spark.sources import incremental
 
-    base = _llm._materialized(
-        spark,
-        sf_dir,
-        "orders_upsert_base",
-        lambda: t(spark, sf_dir, "orders").select(*_UPSERT_COLS),
-    )
-    root = _llm._artifact_path(sf_dir, "orders_upsert_view")
-    incremental.init_view(
-        root, [str(_llm._artifact_path(sf_dir, "orders_upsert_base"))]
-    )
+    base, root = _orders_view(spark, sf_dir, "orders_upsert_view")
     key = F.col("o_orderkey")
     status1 = F.when(F.col("o_orderstatus") == "P", F.lit("F")).otherwise(
         F.col("o_orderstatus")
@@ -1564,19 +1568,9 @@ def _orders_delete_view(spark: SparkSession, sf_dir: str):
     purges finished orders with orderkey % 3 == 0 via ``delete_where``
     — a predicate over the POST-restatement view state, which is what
     makes the two-step composition worth proving."""
-    from de_project_sprint_etl_spark.plans import llm as _llm
     from de_project_sprint_etl_spark.sources import incremental
 
-    base = _llm._materialized(
-        spark,
-        sf_dir,
-        "orders_upsert_base",
-        lambda: t(spark, sf_dir, "orders").select(*_UPSERT_COLS),
-    )
-    root = _llm._artifact_path(sf_dir, "orders_delete_view")
-    incremental.init_view(
-        root, [str(_llm._artifact_path(sf_dir, "orders_upsert_base"))]
-    )
+    base, root = _orders_view(spark, sf_dir, "orders_delete_view")
     key = F.col("o_orderkey")
     if not incremental.has_tag(root, "restate"):
         incremental.merge_upsert(
@@ -1647,19 +1641,9 @@ def _orders_evolution_view(spark: SparkSession, sf_dir: str):
     column null — no base rewrite, no backfill job — which is the
     add-a-column migration a 100-TB table cannot afford to do any
     other way."""
-    from de_project_sprint_etl_spark.plans import llm as _llm
     from de_project_sprint_etl_spark.sources import incremental
 
-    base = _llm._materialized(
-        spark,
-        sf_dir,
-        "orders_upsert_base",
-        lambda: t(spark, sf_dir, "orders").select(*_UPSERT_COLS),
-    )
-    root = _llm._artifact_path(sf_dir, "orders_evolution_view")
-    incremental.init_view(
-        root, [str(_llm._artifact_path(sf_dir, "orders_upsert_base"))]
-    )
+    base, root = _orders_view(spark, sf_dir, "orders_evolution_view")
     if not incremental.has_tag(root, "add-late-fee"):
         key = F.col("o_orderkey")
         incremental.merge_upsert(

@@ -10,6 +10,7 @@ import sys
 from pathlib import Path
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -253,24 +254,55 @@ def test_pair_artifacts_match_live_pipelines(spark):
     assert live_mh == art_mh
 
 
-def test_pair_artifact_invalidates_on_fixture_change(spark, tmp_path):
-    """A regenerated corpus must never serve a stale pair artifact:
-    the cache key folds in the documents fixture's (mtime_ns, size), so
-    rewriting the file — even with identical bytes — points the
-    accessor at a fresh build."""
+def _ngram_pairs(spark, sf_dir):
+    from de_project_sprint_etl_spark.plans import llm
+
+    return llm.ngram_pairs(spark, sf_dir)
+
+
+def _order_log_v2(spark, sf_dir):
+    from de_project_sprint_etl_spark.plans import testdata
+
+    return testdata.order_log_v2_cached(spark, sf_dir)
+
+
+def _weeks_dim(spark, sf_dir):
+    from de_project_sprint_etl_spark.plans import testdata
+
+    return testdata.weeks_dim_cached(spark, sf_dir)
+
+
+def _media_fixture(spark, sf_dir):
+    return RAW_QUERIES["media_from_files"](spark, sf_dir)
+
+
+@pytest.mark.parametrize(
+    "accessor, table",
+    [
+        (_ngram_pairs, "documents"),
+        (_order_log_v2, "lineitem"),
+        (_weeks_dim, "events"),
+        (_weeks_dim, "lineitem"),
+        (_media_fixture, "documents"),
+    ],
+    ids=lambda v: v if isinstance(v, str) else v.__name__.strip("_"),
+)
+def test_pair_artifact_invalidates_on_fixture_change(spark, tmp_path, accessor, table):
+    """A regenerated corpus must never serve a stale derived artifact:
+    the cache key folds in the fingerprint of EVERY table the artifact
+    is built from, so rewriting any one of them — even with identical
+    bytes — points the accessor at a fresh build."""
     import os
     import shutil
 
-    from de_project_sprint_etl_spark.plans import llm
-
     d = tmp_path / "corpus"
     shutil.copytree("/root/testdata/sf0.001", d)
-    p1 = llm.ngram_pairs(spark, str(d))
+    p1 = accessor(spark, str(d))
     files1 = set(p1.inputFiles())
     n1 = p1.count()
-    doc = d / "documents.parquet"
-    os.utime(doc, ns=(os.stat(doc).st_atime_ns, os.stat(doc).st_mtime_ns + 7))
-    p2 = llm.ngram_pairs(spark, str(d))
+    src = d / f"{table}.parquet"
+    os.utime(src, ns=(os.stat(src).st_atime_ns, os.stat(src).st_mtime_ns + 7))
+    p2 = accessor(spark, str(d))
     files2 = set(p2.inputFiles())
     assert files1 != files2, "stale artifact served after fixture rewrite"
     assert p2.count() == n1

@@ -215,12 +215,7 @@ def main() -> None:
             "mut_stats_refreshed",
             "mh_groups_refreshed",
         ):
-            p = llm._artifact_path(SF_DIR, name)
-            shutil.rmtree(p, ignore_errors=True)
-            # path-keyed entry covers the copy-based groups artifact;
-            # the manifest views key by commit id, and the fresh
-            # commit's new cid forces its own cache miss
-            llm._READ_CACHE.pop((id(spark), str(p)), None)
+            shutil.rmtree(llm._artifact_path(SF_DIR, name), ignore_errors=True)
         t0 = time.time()
         n_pairs = llm.refresh_minhash_pairs(spark, SF_DIR).count()
         n_stats = llm.refresh_mutant_stats(spark, SF_DIR).count()

@@ -41,9 +41,9 @@ if GRAPH_MODE:
 
 
 def _scale_dir() -> str:
-    """Cache dir keyed on the base path and the source fixtures'
-    (mtime_ns, size) — same contract as plans/llm._materialized — so a
-    regenerated or re-pointed base corpus never reuses stale replicas."""
+    """Cache dir keyed on the base path and the replicated fixtures'
+    (mtime_ns, size), so a regenerated or re-pointed base corpus never
+    reuses stale replicas."""
     sig = "_".join(
         f"{os.stat(os.path.join(BASE, t + '.parquet')).st_mtime_ns}-"
         f"{os.stat(os.path.join(BASE, t + '.parquet')).st_size}"
