@@ -36,15 +36,21 @@ ROOT = Path(__file__).resolve().parents[1] / ".cache" / "derived"
 _MARKER = "_SUCCESS"
 
 
-def location(sf_dir: str, name: str, inputs: tuple[str, ...]) -> Path:
-    """Directory of artifact ``name`` built from the tables ``inputs``
-    (``<sf_dir>/<table>.parquet``) of the corpus at ``sf_dir``."""
+def input_digest(sf_dir: str, inputs: tuple[str, ...]) -> str:
+    """Digest of the tables ``inputs`` (``<sf_dir>/<table>.parquet``):
+    changes whenever any of them is rewritten."""
     digest = hashlib.sha256()
     for table in sorted(inputs):
         fp = data_fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
         digest.update(repr((table, fp)).encode())
+    return digest.hexdigest()[:16]
+
+
+def location(sf_dir: str, name: str, inputs: tuple[str, ...]) -> Path:
+    """Directory of artifact ``name`` built from the tables ``inputs``
+    of the corpus at ``sf_dir``."""
     corpus = sf_dir.strip("/").replace("/", "_")
-    return ROOT / f"{corpus}-{digest.hexdigest()[:16]}" / name
+    return ROOT / f"{corpus}-{input_digest(sf_dir, inputs)}" / name
 
 
 def publish(final: Path, write) -> Path:

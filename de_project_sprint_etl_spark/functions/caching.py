@@ -34,17 +34,19 @@ _SESSION_VALUES: dict[str, dict] = {}
 
 def session_scoped_value(namespace: str, spark, subkey: tuple, compute):
     """Session-scoped memo with the house single-live-session contract,
-    extracted (r6 review) so every corpus-property cache — the adaptive
-    IVF corpus count, the dedup saturation rate, the shared vocab curve
-    — uses ONE implementation instead of hand-rolled variants with
-    inconsistent id()-reuse guards. The session OBJECT is stored and
-    identity-checked (an id() reused after GC can never alias a dead
-    session's entry); entries from any other session are purged on
-    insert. ``subkey`` is ``(locator, *fingerprint)`` — e.g. an sf_dir
-    plus its file stats: on insert, SAME-session entries for the same
-    locator with a different fingerprint are purged too (ADVICE r6),
-    so a long-lived session that regenerates fixtures doesn't
-    accumulate one dead value per old fingerprint."""
+    the ONE implementation behind every per-session memo: prepared
+    plans (``"plans"``), fixture table scans (``"scan"``), artifact
+    reads (``"artifacts"``), the fan-out decision and the fanned docs
+    scan, the PCA model, and the corpus properties (IVF corpus count,
+    dedup saturation rate, vocab curve, pack-assignment ranking). The
+    session OBJECT is stored and identity-checked (an id() reused after
+    GC can never alias a dead session's entry); entries from any other
+    session are purged on insert. ``subkey`` is ``(locator,
+    *fingerprint)`` — e.g. an sf_dir plus its file stats: on insert,
+    SAME-session entries for the same locator with a different
+    fingerprint are purged too (ADVICE r6), so a long-lived session
+    that regenerates fixtures doesn't accumulate one dead value per old
+    fingerprint. A ``None`` value is memoized like any other."""
     ns = _SESSION_VALUES.setdefault(namespace, {})
     key = (id(spark), *subkey)
     hit = ns.get(key)

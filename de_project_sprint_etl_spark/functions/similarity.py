@@ -23,6 +23,8 @@ embeddings, left-fold summation — bit-compatible with the DuckDB oracle
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -211,13 +213,9 @@ def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
 # when done on both join sides. Column objects are immutable unresolved
 # expressions, so the literal is built once per distinct constant and
 # reused across queries/sessions in the JVM.
-_LIT_CACHE: dict[tuple, Column] = {}
-
-
+@functools.lru_cache(maxsize=None)
 def _cached_lit(key: tuple) -> Column:
-    if key not in _LIT_CACHE:
-        _LIT_CACHE[key] = F.lit([list(v) if isinstance(v, tuple) else v for v in key])
-    return _LIT_CACHE[key]
+    return F.lit([list(v) if isinstance(v, tuple) else v for v in key])
 
 
 def lsh_topk(

@@ -31,11 +31,13 @@ as plans/llm.py.
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_project_sprint_etl_spark.functions import clustering, dedup, embeddings, lm, similarity
+from de_project_sprint_etl_spark.functions.caching import session_scoped_value
 from de_project_sprint_etl_spark.functions.text import SQL_NORM, h64, sql_h64
 from de_project_sprint_etl_spark.plans.llm import (
     LSH_TABLES,
@@ -48,7 +50,7 @@ from de_project_sprint_etl_spark.plans.llm import (
     emb_with_copies,
     fan_out,
 )
-from de_project_sprint_etl_spark.plans.registry import register
+from de_project_sprint_etl_spark.plans.registry import data_fingerprint, register
 from de_project_sprint_etl_spark.plans.testdata import t
 
 # --- exact-substring duplication profile ------------------------------------
@@ -1240,11 +1242,7 @@ def _vocab_curve_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation-persisted shingle stream inside it — without this, each
     build re-ran the dominant tokenize/explode job and unpersisted the
     identical stream the previous query just computed (r6 review)."""
-    import os
-
-    from de_project_sprint_etl_spark.functions.caching import session_scoped_value
     from de_project_sprint_etl_spark.plans.llm import docs_fanned
-    from de_project_sprint_etl_spark.plans.registry import data_fingerprint
 
     fp = data_fingerprint(os.path.join(sf_dir, "documents.parquet"))
     return session_scoped_value(
@@ -1334,11 +1332,6 @@ def _saturation_rate(spark: SparkSession, sf_dir: str) -> float:
     tier decision below is engine-identical. One collect per (session,
     corpus fingerprint): the signal is a property of the corpus, not
     the invocation (session_scoped_value, like llm._emb_count)."""
-    import os
-
-    from de_project_sprint_etl_spark.functions.caching import session_scoped_value
-    from de_project_sprint_etl_spark.plans.registry import data_fingerprint
-
     def compute() -> float:
         row = (
             _vocab_curve_cached(spark, sf_dir)
@@ -2962,13 +2955,18 @@ def _pca_scatter_batches(batches):
                 )
 
 
-#: once-per-corpus PCA model memo (codebook pattern — the PQ family
-#: caches its trained codebooks the same way); stat-fingerprint-keyed
-#: so a regenerated fixture can never serve a stale component
-_PCA_MODEL_CACHE: dict[tuple, dict | None] = {}
-
-
 def _pca_model(spark: SparkSession, sf_dir: str) -> dict | None:
+    """``_fit_pca_model`` memoized once per (session, corpus,
+    embeddings fingerprint) — codebook pattern, as the PQ family caches
+    its trained codebooks — so a regenerated fixture can never serve a
+    stale component. The empty-corpus ``None`` is memoized too."""
+    fp = data_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
+    return session_scoped_value(
+        "pca_model", spark, (sf_dir, fp), lambda: _fit_pca_model(spark, sf_dir)
+    )
+
+
+def _fit_pca_model(spark: SparkSession, sf_dir: str) -> dict | None:
     """Top-principal-component model of the embedding corpus by power
     iteration — the shared once-per-corpus stage behind
     ``embedding_pca_variance`` (the variance-share artifact) and
@@ -3002,22 +3000,7 @@ def _pca_model(spark: SparkSession, sf_dir: str) -> dict | None:
     cells) and the Python loop replays the identical IEEE fold order,
     so the result is bit-equal to the former in-engine iteration AND to
     the oracle's LIST(... ORDER BY) sums."""
-    import os
-
     from de_project_sprint_etl_spark.plans.llm import fan_out
-    from de_project_sprint_etl_spark.plans.registry import data_fingerprint
-
-    key = (
-        id(spark),
-        sf_dir,
-        data_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
-    )
-    if key in _PCA_MODEL_CACHE:
-        return _PCA_MODEL_CACHE[key]
-    # single-live-session contract (the _PLAN_CACHE discipline): drop
-    # models trained under any other SparkSession on insert
-    for k in [k for k in _PCA_MODEL_CACHE if k[0] != id(spark)]:
-        _PCA_MODEL_CACHE.pop(k, None)
 
     emb = fan_out(
         spark, t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -3080,7 +3063,6 @@ def _pca_model(spark: SparkSession, sf_dir: str) -> dict | None:
     if not cells:
         # empty corpus: callers produce empty frames (the former
         # all-DataFrame form yielded zero rows via empty inner joins)
-        _PCA_MODEL_CACHE[key] = None
         return None
     # trace as an exact integer sum (the cells' DECIMALs are integers);
     # int -> float is correctly rounded in both CPython and the JVM, so
@@ -3125,7 +3107,7 @@ def _pca_model(spark: SparkSession, sf_dir: str) -> dict | None:
     for k in dims:
         if abs(v[k]) > best:
             top_dim, best = k, abs(v[k])
-    model = {
+    return {
         "n_vecs": n_vecs,
         "dim": dim,
         "dims": dims,
@@ -3134,8 +3116,6 @@ def _pca_model(spark: SparkSession, sf_dir: str) -> dict | None:
         "trace": trace,
         "top_dim": top_dim,
     }
-    _PCA_MODEL_CACHE[key] = model
-    return model
 
 
 @register("embedding_pca_variance", _sql_pca_variance())

@@ -25,10 +25,13 @@ from pyspark.sql import functions as F
 
 from de_project_sprint_etl_spark import artifacts
 from de_project_sprint_etl_spark.functions import dedup, embeddings, media, similarity, text
-from de_project_sprint_etl_spark.functions.caching import cached_generation
+from de_project_sprint_etl_spark.functions.caching import (
+    cached_generation,
+    session_scoped_value,
+)
 from de_project_sprint_etl_spark.functions.text import SQL_NORM, sql_h64
 from de_project_sprint_etl_spark.sources import incremental
-from de_project_sprint_etl_spark.plans.registry import register
+from de_project_sprint_etl_spark.plans.registry import data_fingerprint, register
 from de_project_sprint_etl_spark.plans.testdata import events_df, t
 
 # --- shared corpus builders -------------------------------------------------
@@ -54,28 +57,22 @@ def fan_out(
     # memoize per input plan object: df.rdd.getNumPartitions() forces
     # physical planning (~0.1 s of driver time per call), and the same
     # cached scan (plans/testdata.t) flows through here in every query.
-    # The cache holds the df reference so its id() can't be recycled.
-    key = (id(df), min_splits)
-    hit = _FAN_CACHE.get(key)
-    if hit is None or hit[0] is not df:
-        hit = (df, df.rdd.getNumPartitions() >= min_splits)
-        _FAN_CACHE[key] = hit
-    if hit[1]:
-        return df
-    return df.repartition(target)
-
-
-_FAN_CACHE: dict[tuple, tuple] = {}
-_DOCS_CACHE: dict[tuple[int, str], DataFrame] = {}
+    # The value holds the df reference so its id() can't be recycled.
+    _df, split = session_scoped_value(
+        "fan_out",
+        spark,
+        (id(df), min_splits),
+        lambda: (df, df.rdd.getNumPartitions() >= min_splits),
+    )
+    return df if split else df.repartition(target)
 
 
 def docs_fanned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _DOCS_CACHE:
-        _DOCS_CACHE[key] = fan_out(
-            spark, t(spark, sf_dir, "documents").select("doc_id", "text")
-        )
-    return _DOCS_CACHE[key]
+    def build() -> DataFrame:
+        return fan_out(spark, t(spark, sf_dir, "documents").select("doc_id", "text"))
+
+    fp = data_fingerprint(os.path.join(sf_dir, "documents.parquet"))
+    return session_scoped_value("docs_fanned", spark, (sf_dir, fp), build)
 
 
 # --- once-per-corpus materialization ----------------------------------------
@@ -1806,9 +1803,6 @@ def _emb_count(spark: SparkSession, sf_dir: str) -> int:
     the leaf-file-aware parquet fingerprint so a regenerated fixture —
     even one rewritten in place with identical names/sizes —
     invalidates."""
-    from de_project_sprint_etl_spark.functions.caching import session_scoped_value
-    from de_project_sprint_etl_spark.plans.registry import data_fingerprint
-
     fp = data_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     return session_scoped_value(
         "emb_count",

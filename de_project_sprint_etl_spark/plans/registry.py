@@ -18,6 +18,11 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from de_project_sprint_etl_spark.functions.caching import (
+    _SESSION_VALUES,
+    session_scoped_value,
+)
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -33,13 +38,13 @@ ORACLES: dict[str, str] = {}
 # logical plan, so re-invoking a query for the same (session, sf_dir)
 # can return the SAME plan object. Building a cohort/dedup plan costs
 # 0.2–0.6 s of driver-side py4j/analysis work per call — pure overhead
-# on the second and every later invocation. Cache entries hold the
-# session object, so a restarted session gets fresh plans — and, on
-# every insert, entries from any OTHER session are evicted (VERDICT r5:
-# a long-lived process that churns SparkSessions must not retain every
-# dead session's plan objects forever; same single-live-session
-# contract as functions/caching.cached_generation).
-_PLAN_CACHE: dict[tuple, tuple[SparkSession, DataFrame]] = {}
+# on the second and every later invocation. It is the "plans" namespace
+# of caching.session_scoped_value, keyed (query name, sf_dir, fixture
+# fingerprint): a restarted session gets fresh plans, an insert evicts
+# every other session's plans (VERDICT r5), and a query keeps one plan,
+# its previous fixture generation's being purged. This name is bound to
+# the namespace's own dict so callers can clear it.
+_PLAN_CACHE = _SESSION_VALUES.setdefault("plans", {})
 
 
 def data_fingerprint(path: str) -> tuple:
@@ -84,18 +89,8 @@ def _dir_fingerprint(sf_dir: str) -> int:
 
 def _prepared(name: str, fn: QueryFn) -> QueryFn:
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (name, id(spark), sf_dir, _dir_fingerprint(sf_dir))
-        hit = _PLAN_CACHE.get(key)
-        if hit is not None and hit[0] is spark:
-            return hit[1]
-        df = fn(spark, sf_dir)
-        for k, (sess, _plan) in list(_PLAN_CACHE.items()):
-            # drop dead sessions' plans, and this query's plans built
-            # against a previous fixture generation (stale fingerprint)
-            if sess is not spark or (k[0] == key[0] and k != key):
-                _PLAN_CACHE.pop(k, None)
-        _PLAN_CACHE[key] = (spark, df)
-        return df
+        subkey = (name, sf_dir, _dir_fingerprint(sf_dir))
+        return session_scoped_value("plans", spark, subkey, lambda: fn(spark, sf_dir))
 
     wrapper.__name__ = getattr(fn, "__name__", name)
     wrapper.__doc__ = fn.__doc__

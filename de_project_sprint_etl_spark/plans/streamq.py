@@ -22,6 +22,7 @@ from __future__ import annotations
 import atexit
 import itertools
 import os
+import shutil
 import tempfile
 from pathlib import Path
 
@@ -35,13 +36,35 @@ from de_project_sprint_etl_spark.plans.testdata import events_df
 from de_project_sprint_etl_spark.streaming import jobs
 
 _SINK_SEQ = itertools.count()
-#: last (memory-sink table, checkpoint dir) per (session, query tag) —
-#: both cleaned up on the NEXT invocation (the caller still holds a plan
-#: over the current sink), so a long-lived session re-running the
-#: streaming queries accumulates neither sinks nor /tmp checkpoints.
-#: A FRESH checkpoint per run is load-bearing: reusing one would resume
-#: from committed offsets and the re-run would see no data.
-_LAST_SINK: dict[tuple[int, str], tuple[str, str]] = {}
+#: last run per (session, query tag): its memory-sink view (or None)
+#: and its temp dirs — dropped on the NEXT invocation (the caller still
+#: holds a plan over the current run), the final generation at
+#: interpreter exit, so a long-lived session re-running the streaming
+#: queries accumulates neither sinks nor /tmp checkpoints. A FRESH
+#: checkpoint per run is load-bearing: reusing one would resume from
+#: committed offsets and the re-run would see no data.
+_LAST_RUN: dict[tuple[int, str], tuple[str | None, tuple[str, ...]]] = {}
+
+
+def _rotate(spark: SparkSession, tag: str, view: str | None,
+            *prefixes: str) -> tuple[str, ...]:
+    """Drop the previous (session, ``tag``) run's view and dirs, then
+    make and record this run's: one fresh temp dir per prefix."""
+    prev = _LAST_RUN.pop((id(spark), tag), None)
+    if prev is not None:
+        if prev[0] is not None:
+            spark.catalog.dropTempView(prev[0])
+        for d in prev[1]:
+            shutil.rmtree(d, ignore_errors=True)
+    dirs = tuple(tempfile.mkdtemp(prefix=p) for p in prefixes)
+    _LAST_RUN[(id(spark), tag)] = (view, dirs)
+    return dirs
+
+
+@atexit.register
+def _cleanup_stream_tmpdirs() -> None:
+    for d in itertools.chain.from_iterable(dirs for _view, dirs in _LAST_RUN.values()):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _run_to_sink(spark: SparkSession, tag: str, stream: DataFrame,
@@ -49,15 +72,8 @@ def _run_to_sink(spark: SparkSession, tag: str, stream: DataFrame,
     """Drain ``stream`` into a fresh memory sink with AvailableNow and
     return the sink table; drop the previous invocation's sink and
     checkpoint for this (session, tag) first."""
-    import shutil
-
-    prev = _LAST_SINK.pop((id(spark), tag), None)
-    if prev is not None:
-        spark.catalog.dropTempView(prev[0])
-        shutil.rmtree(prev[1], ignore_errors=True)
     name = f"stream_{tag}_sink_{next(_SINK_SEQ)}"
-    ckpt = tempfile.mkdtemp(prefix="strq_ckpt_")
-    _LAST_SINK[(id(spark), tag)] = (name, ckpt)
+    (ckpt,) = _rotate(spark, tag, name, "strq_ckpt_")
     # A streaming query locks its state-partition count to
     # spark.sql.shuffle.partitions at first start of the checkpoint.
     # These gate queries drain ONE micro-batch of fixture-sized state,
@@ -508,25 +524,6 @@ def q_streaming_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAST_FEB: dict[tuple[int, str], tuple[str, str]] = {}
-
-
-@atexit.register
-def _cleanup_stream_tmpdirs() -> None:
-    """The per-invocation lifecycle only removes the PREVIOUS run's
-    checkpoint/drain dirs (the caller still holds a plan over the
-    current ones) — so the FINAL generation under /tmp is cleaned here
-    at interpreter exit instead of leaking one pair per session per
-    process lifetime (ADVICE r5)."""
-    import shutil
-
-    for ckpt, out in _LAST_FEB.values():
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-    for _name, ckpt in _LAST_SINK.values():
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def _retention_stream_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Snapshot + increment order logs materialized once per corpus
     generation: the snapshot as one static parquet dir, the increment
@@ -573,8 +570,6 @@ def q_streaming_retention_compact(spark: SparkSession, sf_dir: str) -> DataFrame
     because the C5 merge is a union (arrival-order-independent) and the
     mart is computed after the drain — the idempotent-merge fixed point
     the reference's README promises, proven on the streaming path."""
-    import shutil
-
     from de_project_sprint_etl_spark.operators import facts
     from de_project_sprint_etl_spark.plans.testdata import (
         retention_compact_from,
@@ -583,13 +578,7 @@ def q_streaming_retention_compact(spark: SparkSession, sf_dir: str) -> DataFrame
 
     snap_dir, inc_dir = _retention_stream_src(spark, sf_dir)
 
-    prev = _LAST_FEB.pop((id(spark), "retention"), None)
-    if prev is not None:
-        shutil.rmtree(prev[0], ignore_errors=True)
-        shutil.rmtree(prev[1], ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="strq_ret_ckpt_")
-    out = tempfile.mkdtemp(prefix="strq_ret_out_")
-    _LAST_FEB[(id(spark), "retention")] = (ckpt, out)
+    ckpt, out = _rotate(spark, "retention", None, "strq_ret_ckpt_", "strq_ret_out_")
 
     schema = spark.read.parquet(inc_dir).schema
 

@@ -31,22 +31,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from de_project_sprint_etl_spark import artifacts
+from de_project_sprint_etl_spark.functions.caching import session_scoped_value
 from de_project_sprint_etl_spark.operators import dims, facts, retention
-from de_project_sprint_etl_spark.plans.registry import register
+from de_project_sprint_etl_spark.plans.registry import data_fingerprint, register
 
 SPLIT_DATE = "1999-01-01"
 REFUND_PRIORITIES = ("1-URGENT", "2-HIGH")
 ITEM_CAP = 5  # retention_mart scopes items (reference full-joins item-level
 # cohorts on period alone, cross-combining items per period —
 # unbounded on TPC-H cardinalities, so the mart query caps item_id)
-
-
-# Table-scan DataFrame cache. A DataFrame is an immutable logical plan,
-# so handing the same object to every query is safe — and saves the
-# ~0.1 s per call that spark.read.parquet spends on footer/schema reads
-# plus the two conf round trips (measured: a cohort query paid ~0.8 s of
-# driver-side build time, mostly in repeated t() calls).
-_SCAN_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
 
 # Canonical logical types every query was written against. The fixture
@@ -127,15 +120,24 @@ _CANONICAL: dict[str, dict[str, str]] = {
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), sf_dir, name)
-    cached = _SCAN_CACHE.get(key)
-    if cached is not None:
-        return cached
+    """Scan of fixture table ``name``, memoized per (session, table,
+    file fingerprint). A DataFrame is an immutable logical plan, so
+    handing the same object to every query is safe — and saves the
+    ~0.1 s per call that spark.read.parquet spends on footer/schema
+    reads plus the two conf round trips (measured: a cohort query paid
+    ~0.8 s of driver-side build time, mostly in repeated t() calls). A
+    rewritten table gets a fresh scan."""
+    path = f"{sf_dir}/{name}.parquet"
+    subkey = ((sf_dir, name), data_fingerprint(path))
+    return session_scoped_value("scan", spark, subkey, lambda: _scan(spark, path, name))
+
+
+def _scan(spark: SparkSession, path: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # events.parquet stores TIMESTAMP(NANOS) which Spark's parquet reader
     # rejects by default; read nanos as long and convert in events_df().
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.parquet(path)
     expected = _CANONICAL.get(name, {})
     actual = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     drifted = [
@@ -156,7 +158,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         pass  # handled in events_df(); listed here for the reader
     if drifted:
         df = df.withColumns({col: F.col(col).cast(want) for col, want in drifted})
-    _SCAN_CACHE[key] = df
     return df
 
 

@@ -853,56 +853,44 @@ def copurchase_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- bucketed co-located join (write-time shuffle, amortized) ---------------
 
 _BUCKETS = 8
-_BK_READY: set[tuple[int, str]] = set()
 
 
 def _bucketed_order_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Bucketed managed twins of orders/lineitem, keyed by the order key
-    and created once per (session, corpus) — Spark's in-memory catalog
-    is session-scoped, so the first invocation pays the write-time
-    shuffle and every later query in the session joins them with ZERO
-    exchanges (the classic warehouse layout for a fact table joined
-    daily on one key; at cluster scale this is a persistent metastore +
-    bucketed parquet on shared storage)."""
+    and named by the corpus and the digest of both inputs
+    (``artifacts.input_digest``), so a rewritten input gets fresh twins.
+    Spark's in-memory catalog is session-scoped, so the first invocation
+    per (session, corpus generation) pays the write-time shuffle and
+    every later query in the session joins them with ZERO exchanges (the
+    classic warehouse layout for a fact table joined daily on one key;
+    at cluster scale this is a persistent metastore + bucketed parquet
+    on shared storage)."""
+    import shutil
+    from urllib.parse import urlparse
+
     from de_project_sprint_etl_spark.sources import writers
 
-    key = sf_dir.strip("/").replace("/", "_").replace(".", "_").replace("-", "_")
+    corpus = sf_dir.strip("/").replace("/", "_").replace(".", "_").replace("-", "_")
+    key = f"{corpus}_{artifacts.input_digest(sf_dir, ('orders', 'lineitem'))}"
     to, tl = f"bk_orders_{key}", f"bk_lineitem_{key}"
-    ck = (id(spark), sf_dir)
-    if ck not in _BK_READY:
-        # The in-memory catalog is session-scoped but the warehouse
-        # DIRECTORY persists: a table written by a previous session is
-        # unknown to this catalog yet its location exists, and
-        # saveAsTable refuses to reuse it. Clear stale locations first.
-        import shutil
-        from urllib.parse import urlparse
-
+    frames = {
+        to: lambda: t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus"),
+        tl: lambda: t(spark, sf_dir, "lineitem").select(
+            F.col("l_orderkey").alias("o_orderkey"), "l_extendedprice", "l_discount"
+        ),
+    }
+    for name, frame in frames.items():
+        if spark.catalog.tableExists(name):
+            continue
+        # The catalog is session-scoped but the warehouse DIRECTORY
+        # persists: a table written by a previous session is unknown to
+        # this catalog yet its location exists, and saveAsTable refuses
+        # to reuse it. Clear the stale location first.
         wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for name in (to, tl):
-            loc = os.path.join(wh, name)
-            if not spark.catalog.tableExists(name) and os.path.exists(loc):
-                shutil.rmtree(loc)
-        if not spark.catalog.tableExists(to):
-            writers.save_bucketed_table(
-                t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus"),
-                to,
-                ["o_orderkey"],
-                _BUCKETS,
-                sort_by=["o_orderkey"],
-            )
-        if not spark.catalog.tableExists(tl):
-            writers.save_bucketed_table(
-                t(spark, sf_dir, "lineitem").select(
-                    F.col("l_orderkey").alias("o_orderkey"),
-                    "l_extendedprice",
-                    "l_discount",
-                ),
-                tl,
-                ["o_orderkey"],
-                _BUCKETS,
-                sort_by=["o_orderkey"],
-            )
-        _BK_READY.add(ck)
+        shutil.rmtree(os.path.join(wh, name), ignore_errors=True)
+        writers.save_bucketed_table(
+            frame(), name, ["o_orderkey"], _BUCKETS, sort_by=["o_orderkey"]
+        )
     return to, tl
 
 

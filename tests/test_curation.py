@@ -233,6 +233,47 @@ def test_bucketed_join_query_is_exchange_free_when_warm(spark):
     assert "SortMergeJoin" in plan, plan
 
 
+def test_bucketed_join_rebuilds_after_fixture_rewrite(spark, tmp_path):
+    """The bucketed twins are named by the digest of their inputs, so
+    rewriting orders.parquet in the same session builds fresh twins
+    instead of joining the old ones: the second answer matches the
+    DuckDB oracle on the rewritten corpus."""
+    import shutil
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from de_project_sprint_etl_spark.plans import warehouse  # noqa: F401
+    from de_project_sprint_etl_spark.plans.registry import ORACLES, RAW_QUERIES
+    from tools.oracle_check import compare_frames
+
+    name = "bucketed_join_revenue"
+    d = tmp_path / "corpus"
+    d.mkdir()
+    for table in ("orders", "lineitem"):  # the query's only inputs
+        shutil.copyfile(f"{SF}/{table}.parquet", d / f"{table}.parquet")
+    before = {tb.name for tb in spark.catalog.listTables()}
+    try:
+        first = RAW_QUERIES[name](spark, str(d)).toPandas()
+        orders = pq.read_table(d / "orders.parquet")
+        pq.write_table(orders.slice(0, orders.num_rows // 2), d / "orders.parquet")
+        second = RAW_QUERIES[name](spark, str(d)).toPandas()
+
+        con = duckdb.connect()
+        for table in ("orders", "lineitem"):
+            con.execute(
+                f"CREATE VIEW {table} AS "
+                f"SELECT * FROM read_parquet('{d}/{table}.parquet')"
+            )
+        verdict = compare_frames(second, con.execute(ORACLES[name]).df())
+        assert verdict["err"] is None, verdict
+        assert second["n_lines"].sum() < first["n_lines"].sum()
+    finally:
+        for tb in spark.catalog.listTables():
+            if not tb.isTemporary and tb.name not in before:
+                spark.sql(f"DROP TABLE IF EXISTS {tb.name}")
+
+
 def test_sqltext_retention_broadcasts_week_dim(spark):
     """The SQL-text retention mart must compile to the same physical
     strategy as the DataFrame pipeline: week dim broadcast, no

@@ -130,7 +130,6 @@ def test_events_ts_decode_adapts_to_physical_type(spark, tmp_path):
         seen[vname] = sorted(
             (r.event_id, r.ts.isoformat()) for r in ev.select("event_id", "ts").collect()
         )
-        td._SCAN_CACHE.clear()
     assert len({tuple(v) for v in seen.values()}) == 1, seen
 
 
@@ -151,8 +150,6 @@ def test_drifted_fixture_keeps_gate_green(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
-
-    from de_project_sprint_etl_spark.plans import testdata as td
 
     src = "/root/testdata/sf0.001"
 
@@ -195,33 +192,30 @@ def test_drifted_fixture_keeps_gate_green(spark, tmp_path):
             f"SELECT * FROM read_parquet('{tmp_path}/{tname}.parquet')"
         )
     oracles = entry_mod.oracle_sql()
-    try:
-        for name in (
-            "events_windowed_agg",
-            "tpch_q1_pricing_summary",
-            "text_quality",
-            "embedding_normalize",
-        ):
-            sdf = _QUERIES[name](spark, str(tmp_path))
-            scols = sorted(sdf.columns)
-            srows = sorted(
-                tuple(str(r[c]) for c in scols) for r in sdf.collect()
-            )
-            rel = con.execute(f"SELECT * FROM ({oracles[name]}) q")
-            dcols = [d[0] for d in rel.description]
-            order = sorted(range(len(dcols)), key=lambda i: dcols[i])
-            drows = sorted(
-                tuple(str(row[i]) for i in order) for row in rel.fetchall()
-            )
-            assert scols == sorted(dcols), name
-            assert srows == drows, (
-                name,
-                srows[:3],
-                drows[:3],
-            )
-            assert srows, f"{name} returned no rows on the drifted fixture"
-    finally:
-        td._SCAN_CACHE.clear()
+    for name in (
+        "events_windowed_agg",
+        "tpch_q1_pricing_summary",
+        "text_quality",
+        "embedding_normalize",
+    ):
+        sdf = _QUERIES[name](spark, str(tmp_path))
+        scols = sorted(sdf.columns)
+        srows = sorted(
+            tuple(str(r[c]) for c in scols) for r in sdf.collect()
+        )
+        rel = con.execute(f"SELECT * FROM ({oracles[name]}) q")
+        dcols = [d[0] for d in rel.description]
+        order = sorted(range(len(dcols)), key=lambda i: dcols[i])
+        drows = sorted(
+            tuple(str(row[i]) for i in order) for row in rel.fetchall()
+        )
+        assert scols == sorted(dcols), name
+        assert srows == drows, (
+            name,
+            srows[:3],
+            drows[:3],
+        )
+        assert srows, f"{name} returned no rows on the drifted fixture"
 
 
 def test_oracle_canonicalize_rewrite_shapes():

@@ -18,7 +18,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__  # noqa: E402 — populates the registry
 
-from de_project_sprint_etl_spark.plans import testdata as td  # noqa: E402
 from de_project_sprint_etl_spark.plans.registry import (  # noqa: E402
     RAW_QUERIES,
 )
@@ -59,26 +58,23 @@ def test_pc1_scores_ragged_corpus_matches_oracle(spark, tmp_path):
     import duckdb
 
     sf_dir = _write_ragged_embeddings(tmp_path)
-    try:
-        rows = RAW_QUERIES["embedding_pc1_scores"](spark, sf_dir).collect()
-        assert len(rows) == 8
-        assert all(r["pc1_score"] is not None for r in rows)
+    rows = RAW_QUERIES["embedding_pc1_scores"](spark, sf_dir).collect()
+    assert len(rows) == 8
+    assert all(r["pc1_score"] is not None for r in rows)
 
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW embeddings AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/embeddings.parquet')"
-        )
-        sql = __spark_entry__.oracle_sql()["embedding_pc1_scores"]
-        expect = dict(con.execute(
-            f"SELECT vec_id, pc1_score FROM ({sql}) q"
-        ).fetchall())
-        assert len(expect) == 8
-        for r in rows:
-            assert r["vec_id"] in expect
-            assert abs(r["pc1_score"] - expect[r["vec_id"]]) < 1e-9, r
-    finally:
-        td._SCAN_CACHE.clear()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/embeddings.parquet')"
+    )
+    sql = __spark_entry__.oracle_sql()["embedding_pc1_scores"]
+    expect = dict(con.execute(
+        f"SELECT vec_id, pc1_score FROM ({sql}) q"
+    ).fetchall())
+    assert len(expect) == 8
+    for r in rows:
+        assert r["vec_id"] in expect
+        assert abs(r["pc1_score"] - expect[r["vec_id"]]) < 1e-9, r
 
 
 def test_pc1_registered_query_unchanged_on_equal_width_corpus(spark):

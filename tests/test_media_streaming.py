@@ -958,7 +958,7 @@ def test_streaming_retention_compact_multibatch_parity(spark):
     want = sorted(map(str, RAW_QUERIES["retention_compact"](spark, SF).collect()))
     assert got == want
 
-    _, out = streamq._LAST_FEB[(id(spark), "retention")]
+    _view, (_ckpt, out) = streamq._LAST_RUN[(id(spark), "retention")]
     batches = [d for d in os.listdir(out) if d.startswith("b")]
     assert len(batches) >= 2, f"expected a multi-batch drain, got {batches}"
 

@@ -566,11 +566,12 @@ def test_protobuf_shim_rejects_future_gencode_major():
 
 
 def test_plan_cache_evicts_dead_sessions():
-    """VERDICT r5 #4: _PLAN_CACHE drops entries whose session is not
-    the inserting one, so churning SparkSessions can't retain every
+    """VERDICT r5 #4: the "plans" memo drops entries whose session is
+    not the inserting one, so churning SparkSessions can't retain every
     dead session's plan objects forever. Exercised with stub sessions —
     _prepared only touches identity, never the Spark API."""
-    from de_project_sprint_etl_spark.plans.registry import _PLAN_CACHE, _prepared
+    from de_project_sprint_etl_spark.functions.caching import _SESSION_VALUES
+    from de_project_sprint_etl_spark.plans.registry import _prepared
 
     calls = []
 
@@ -586,14 +587,16 @@ def test_plan_cache_evicts_dead_sessions():
         assert len(calls) == 1
         p2 = wrapped(new_session, "/sf")  # new session: rebuild + purge
         assert p2 != p1 and len(calls) == 2
+        plans = _SESSION_VALUES["plans"]  # keys: (id(session), name, sf_dir, fp)
         assert not any(
-            k[1] == id(old_session) for k in _PLAN_CACHE
+            k[0] == id(old_session) for k in plans
         ), "dead session's plan survived the insert purge"
         # nothing from any other session remains after the insert purge
-        assert all(sess is new_session for sess, _ in _PLAN_CACHE.values())
+        assert all(sess is new_session for sess, _ in plans.values())
     finally:
-        for k in [k for k in _PLAN_CACHE if k[0] == "__test_evict__"]:
-            _PLAN_CACHE.pop(k, None)
+        plans = _SESSION_VALUES["plans"]
+        for k in [k for k in plans if k[1] == "__test_evict__"]:
+            plans.pop(k, None)
 
 
 def test_plan_cache_invalidates_on_fixture_regeneration(tmp_path):
@@ -604,7 +607,8 @@ def test_plan_cache_invalidates_on_fixture_regeneration(tmp_path):
     import os
     import time
 
-    from de_project_sprint_etl_spark.plans.registry import _PLAN_CACHE, _prepared
+    from de_project_sprint_etl_spark.functions.caching import _SESSION_VALUES
+    from de_project_sprint_etl_spark.plans.registry import _prepared
 
     calls = []
 
@@ -626,10 +630,12 @@ def test_plan_cache_invalidates_on_fixture_regeneration(tmp_path):
         p2 = wrapped(sess, d)
         assert p2 is not p1 and len(calls) == 2, "stale plan served"
         # and the stale-generation entry was purged, not retained
-        assert sum(1 for k in _PLAN_CACHE if k[0] == "__test_fp__") == 1
+        plans = _SESSION_VALUES["plans"]  # keys: (id(session), name, sf_dir, fp)
+        assert sum(1 for k in plans if k[1] == "__test_fp__") == 1
     finally:
-        for k in [k for k in _PLAN_CACHE if k[0] == "__test_fp__"]:
-            _PLAN_CACHE.pop(k, None)
+        plans = _SESSION_VALUES["plans"]
+        for k in [k for k in plans if k[1] == "__test_fp__"]:
+            plans.pop(k, None)
 
 
 def test_session_scoped_value_contract():
